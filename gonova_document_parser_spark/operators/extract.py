@@ -1,6 +1,6 @@
-"""The core extraction operator: stage-fused, Arrow-vectorized mapInPandas.
+"""The core extraction operator: stage-fused, Arrow-native mapInArrow.
 
-One ``mapInPandas`` call performs classify -> route -> extract -> merge for
+One ``mapInArrow`` call performs classify -> route -> extract -> merge for
 every document in the Arrow batch — the reference's four pipeline stages
 (``async_processor.py:63-140``) fused into a single pass so each ``html``
 blob is deserialized exactly once (its "Eliminated VQA Duplication"
@@ -12,7 +12,9 @@ Spark-first design notes (SURVEY §4):
     hosts (the reference has no skew story; we do).
   - the per-document Python loop lives *inside* the vectorized UDF call
     (Arrow batch in / Arrow batch out), honoring the "no per-row Python at
-    the Spark boundary" rule; there is no row-at-a-time Python UDF.
+    the Spark boundary" rule; there is no row-at-a-time Python UDF.  Only
+    ``html`` is read into Python; other inputs pass through as Arrow arrays
+    and results are built as Arrow arrays, with no pandas frame between.
   - semantic failures (unparseable doc) become ``success=false`` rows with
     the reference's exact error-marker bytes, never task failures, so
     reruns are deterministic (M3/M4 in SURVEY §2.1).
@@ -37,7 +39,7 @@ from pyspark.sql.types import (
 from ..spec import extract_document
 
 if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import DataFrame
 
 SPAN_TYPE = ArrayType(
@@ -65,36 +67,27 @@ EXTRACTED_SCHEMA = StructType(
 
 
 def _make_batch_fn(passthrough: tuple[str, ...], scanned_extractor=None):
-    def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _extract_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        for pdf in batches:
-            out = {
-                "url": pdf["url"],
-                "warc_ts": pdf["warc_ts"],
-                "page_type": [],
-                "extracted_text": [],
-                "spans": [],
-                "n_blocks": [],
-                "success": [],
-                "error": [],
-            }
-            for payload in pdf["html"]:
-                r = extract_document(
-                    bytes(payload) if payload is not None else b"",
-                    scanned_extractor=scanned_extractor,
-                )
-                out["page_type"].append(r["page_type"])
-                out["extracted_text"].append(r["extracted_text"])
-                out["spans"].append(
-                    [{"start": s, "end": e, "kind": k} for (s, e, k) in r["spans"]]
-                )
-                out["n_blocks"].append(r["n_blocks"])
-                out["success"].append(r["success"])
-                out["error"].append(r["error"])
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
+        schema = to_arrow_schema(EXTRACTED_SCHEMA)
+        results = list(schema)[2:]  # page_type .. error: extract_document keys
+        names = [*schema.names, *passthrough]
+        for batch in batches:
+            rs = [
+                extract_document(payload or b"", scanned_extractor=scanned_extractor)
+                for payload in batch.column("html").to_pylist()
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("url"),
+                    batch.column("warc_ts"),
+                    *[pa.array([r[f.name] for r in rs], f.type) for f in results],
+                    *[batch.column(c) for c in passthrough],
+                ],
+                names=names,
+            )
 
     return _extract_batches
 
@@ -123,6 +116,6 @@ def extract_pages(
         + [df.schema[c] for c in passthrough]
     )
     cols = ["url", "warc_ts", "html", *passthrough]
-    return df.select(*cols).mapInPandas(
+    return df.select(*cols).mapInArrow(
         _make_batch_fn(tuple(passthrough), scanned_extractor), schema
     )

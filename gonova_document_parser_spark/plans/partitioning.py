@@ -68,13 +68,9 @@ def plan_extraction_partitions(
     return spread_by_url(df, min(waves * default_parallelism, max_partitions))
 
 
-def fan_out(
-    df: DataFrame,
-    min_partitions: int | None = None,
-    min_bytes: int | None = None,
-) -> DataFrame:
-    """Ensure at least ``min_partitions`` (default: defaultParallelism)
-    before a per-row EXPANSION operator (explode, shingle, tokenize).
+def fan_out(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
+    """Ensure at least defaultParallelism partitions before a per-row
+    EXPANSION operator (explode, shingle, tokenize).
 
     Scans of small/compacted inputs can carry fewer tasks than cores; the
     expansion multiplies rows AFTER the scan, so the cheap fix is one
@@ -97,7 +93,7 @@ def fan_out(
     is the shared default for JVM-expression call sites, tunable via
     ``GONOVA_FANOUT_MIN_BYTES`` (set 0 to restore unconditional spreading).
     """
-    want = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    want = df.sparkSession.sparkContext.defaultParallelism
     if min_bytes is not None and min_bytes > 0:
         est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
         if est < min_bytes:

@@ -1,6 +1,6 @@
 """Deterministic HTML main-content extraction (pure Python, no Spark).
 
-Pipeline: tokenize -> lightweight DOM -> per-subtree text-density /
+Pipeline: one-pass tag scan -> lightweight DOM -> per-subtree text-density /
 link-density scoring -> best-candidate selection -> boilerplate strip ->
 normalized block list ``[(kind, text)]``.
 
@@ -103,7 +103,20 @@ CANDIDATE_TAGS = frozenset({"body", "main", "article", "div", "section", "td"})
 # An open <p>/<li>/<td>/<tr> is implicitly closed by a sibling of the same tag.
 _AUTOCLOSE_SIBLING = frozenset({"p", "li", "td", "th", "tr", "option", "dt", "dd"})
 
-_TAG_NAME_RE = re.compile(r"/?\s*([a-zA-Z][a-zA-Z0-9:-]*)")
+# One match per tag, anchored at the scan position: the text run before the
+# next '<' (group 1), an optional close slash and tag name (2, 3), and the
+# attribute run up to the tag-closing '>' (4, 5), where "..."/'...' values
+# may contain '>' (``<div title="a>b">`` closes at the real end).  Every
+# quantifier is possessive, so a failed or partial match never backtracks.
+# Without a name the '<' is a comment/doctype ('!', '?') or stray text; a
+# missing '>' after the attribute run means an unterminated quote (the tag
+# then ends at the first '>') or no tag end before end of input.
+_TAG_RE = re.compile(
+    r"""([^<]*+)<(?:(/?)\s*+([a-zA-Z][a-zA-Z0-9:-]*+))?((?:[^>"']++|"[^"]*+"|'[^']*+')*+)(>?)"""
+)
+
+# Raw-text / RCDATA elements: contents never parse as markup.
+_RAW_TEXT_TAGS = frozenset({"script", "style", "textarea"})
 
 # Pathological nesting (tag-soup bombs) flattens beyond this depth: children
 # keep attaching to the node at the cap.  Bounds both recursion and memory;
@@ -114,13 +127,12 @@ MAX_DOM_DEPTH = 256
 class Node:
     """Minimal DOM node. ``tag`` is ``#text`` for text nodes."""
 
-    __slots__ = ("tag", "children", "text", "order")
+    __slots__ = ("tag", "children", "text")
 
-    def __init__(self, tag: str, order: int, text: str = "") -> None:
+    def __init__(self, tag: str, text: str = "") -> None:
         self.tag = tag
         self.children: list[Node] = []
         self.text = text
-        self.order = order
 
 
 def _normalize_text(s: str) -> str:
@@ -130,140 +142,102 @@ def _normalize_text(s: str) -> str:
     return " ".join(unicodedata.normalize("NFC", s).split())
 
 
-def _tag_end(src: str, lt: int, n: int) -> int:
-    """Index of the tag-closing '>', skipping quoted attribute values.
+def parse(src: str) -> Node:
+    """Build a lightweight DOM tree with forgiving error recovery.
 
-    Fast path: no quote before the naive '>' (the overwhelmingly common
-    case) — return it directly.  Otherwise scan respecting "..."/'...'
-    so ``<div title="a>b">`` closes at the real tag end instead of
-    leaking ``b">`` into the text stream.
-    """
-    gt = src.find(">", lt)
-    if gt == -1:
-        return -1
-    dq = src.find('"', lt, gt)
-    sq = src.find("'", lt, gt)
-    if dq == -1 and sq == -1:
-        return gt
-    i = lt + 1
-    while i < n:
-        c = src[i]
-        if c == ">":
-            return i
-        if c == '"' or c == "'":
-            j = src.find(c, i + 1)
-            if j == -1:
-                return gt  # unterminated quote: fall back to naive end
-            i = j + 1
-        else:
-            i += 1
-    return -1
-
-
-def tokenize(src: str):
-    """Yield ('open', tag) / ('close', tag) / ('text', s) tokens.
-
+    One scan: each step matches ``_TAG_RE`` at the current position and
+    applies the text run and the tag to the open-element stack directly.
     Comments, doctype and processing instructions are dropped; raw-text
-    element contents (script/style) are skipped entirely.
+    element contents (script/style/textarea) are skipped entirely; a '<'
+    that starts no tag stays text up to its quote-aware '>'.  An open
+    ``<p>``/``<li>``/... closes a sibling of the same tag; a close tag pops
+    to the nearest open element of that name, or is ignored.
     """
-    # hot loop (profiled ~40% of html extraction): local bindings for the
-    # per-tag method lookups, a single char peek replacing the two
-    # startswith probes, and the full-document lowercase deferred until a
-    # raw-text element actually appears — all byte-identical in behavior
-    tokens: list[tuple[str, str]] = []
-    append = tokens.append
+    root = Node("#root")
+    stack = [root]
+    kids = root.children  # children of the innermost open element
+    match = _TAG_RE.match
     find = src.find
-    low: str | None = None
+    low: str | None = None  # lowercased copy, made at the first raw-text tag
     i, n = 0, len(src)
     while i < n:
-        lt = find("<", i)
-        if lt == -1:
-            append(("text", src[i:]))
+        m = match(src, i)
+        if m is None:  # no '<' left
+            text = src[i:]
+            if not text.isspace():
+                kids.append(Node("#text", text))
             break
-        if lt > i:
-            append(("text", src[i:lt]))
-        nc = src[lt + 1] if lt + 1 < n else ""
-        if nc == "!" or nc == "?":
-            if src.startswith("<!--", lt):
-                end = find("-->", lt + 4)
-                i = n if end == -1 else end + 3
-            else:
-                end = find(">", lt)
-                i = n if end == -1 else end + 1
-            continue
-        gt = _tag_end(src, lt, n)
-        if gt == -1:
-            append(("text", src[lt:]))
-            break
-        raw = src[lt + 1 : gt]
-        i = gt + 1
-        m = _TAG_NAME_RE.match(raw)
-        if m is None:
-            append(("text", src[lt : gt + 1]))
-            continue
-        tag = m.group(1).lower()
-        if raw.startswith("/"):
-            append(("close", tag))
-            continue
-        self_closing = raw.rstrip().endswith("/")
-        append(("open", tag))
-        if self_closing and tag not in VOID_TAGS:
-            append(("close", tag))
-        elif tag in ("script", "style", "textarea") and not self_closing:
-            if low is None:
-                low = src.lower()
-            # raw-text / RCDATA elements: contents never parse as markup.
-            # The close-tag search requires a delimiter after the name so
-            # '</scripts>' does not terminate a <script> early.
-            close = i
-            while True:
-                close = low.find("</" + tag, close)
-                if close == -1:
+        text, slash, name, attrs, gt = m.groups()
+        if text and not text.isspace():
+            kids.append(Node("#text", text))
+        i = m.end()
+        if not gt or name is None:
+            lt = m.end(1)
+            if name is None and src[lt + 1 : lt + 2] in ("!", "?"):
+                if src.startswith("<!--", lt):
+                    close = find("-->", lt + 4)
+                    i = n if close == -1 else close + 3
+                else:
+                    close = find(">", lt)
+                    i = n if close == -1 else close + 1
+                continue
+            if not gt:  # no '>' closes the attribute run
+                # an unterminated quote ends the tag at the first '>'; with
+                # no '>' at all, or none outside quotes, the rest is text
+                i = find(">", lt) + 1 if i < n else 0
+                if i == 0:
+                    kids.append(Node("#text", src[lt:]))
                     break
-                after = close + 2 + len(tag)
-                if after >= n or src[after] in " \t\n\r\f/>":
-                    break
-                close = after
-            if close == -1:
-                i = n
-            else:
-                gt2 = src.find(">", close)
-                i = n if gt2 == -1 else gt2 + 1
-            # Emit the close token so the element pops off the parse stack;
-            # otherwise all following siblings attach inside a boilerplate
-            # node and their text is lost.
-            tokens.append(("close", tag))
-    return tokens
-
-
-def parse(src: str) -> Node:
-    """Build a lightweight DOM tree with forgiving error recovery."""
-    root = Node("#root", 0)
-    stack = [root]
-    order = 0
-    for tok in tokenize(src):
-        kind = tok[0]
-        if kind == "text":
-            text = tok[1]
-            if text.strip():
-                order += 1
-                stack[-1].children.append(Node("#text", order, text))
-        elif kind == "open":
-            tag = tok[1]
+                if name is not None:
+                    attrs = src[m.end(3) : i - 1]
+            if name is None:  # stray '<': text up to its tag end
+                kids.append(Node("#text", src[lt:i]))
+                continue
+        tag = name.lower()
+        if not slash:
             if tag in _AUTOCLOSE_SIBLING and stack[-1].tag == tag:
                 stack.pop()
-            order += 1
-            node = Node(tag, order)
-            stack[-1].children.append(node)
+                kids = stack[-1].children
+            node = Node(tag)
+            kids.append(node)
             if tag not in VOID_TAGS and len(stack) < MAX_DOM_DEPTH:
                 stack.append(node)
-        else:  # close
-            tag = tok[1]
-            for depth in range(len(stack) - 1, 0, -1):
-                if stack[depth].tag == tag:
-                    del stack[depth:]
-                    break
-            # unmatched close tag: ignored
+                kids = node.children
+            if attrs.rstrip().endswith("/"):  # self-closing
+                if tag in VOID_TAGS:
+                    continue
+            elif tag in _RAW_TEXT_TAGS:
+                if low is None:
+                    low = src.lower()
+                # The close-tag search requires a delimiter after the name
+                # so '</scripts>' does not terminate a <script> early.
+                close = i
+                while True:
+                    close = low.find("</" + tag, close)
+                    if close == -1:
+                        break
+                    after = close + 2 + len(tag)
+                    if after >= n or src[after] in " \t\n\r\f/>":
+                        break
+                    close = after
+                if close == -1:
+                    i = n
+                else:
+                    gt2 = find(">", close)
+                    i = n if gt2 == -1 else gt2 + 1
+            else:
+                continue
+        # close tag (explicit, self-closing or raw-text end): pop to the
+        # nearest open element of that name; unmatched closes are ignored
+        if stack[-1].tag == tag:
+            stack.pop()
+            kids = stack[-1].children
+            continue
+        for depth in range(len(stack) - 2, 0, -1):
+            if stack[depth].tag == tag:
+                del stack[depth:]
+                kids = stack[-1].children
+                break
     return root
 
 

@@ -472,6 +472,9 @@ def _decode_string(raw: bytes, cmap: tuple[int, dict[int, str]] | None) -> str:
 
 
 _NAME_BODY_RE = re.compile(rb"[A-Za-z0-9._#-]*")
+# A literal string with no escapes and no nested parens (the common case):
+# its body is the string's raw bytes as-is.
+_PLAIN_LITERAL_RE = re.compile(rb"\(([^()\\]*)\)")
 
 
 def _tokenize_content(stream: bytes):
@@ -489,6 +492,11 @@ def _tokenize_content(stream: bytes):
             i = m.end()
             continue
         if b == 0x28:  # (
+            m = _PLAIN_LITERAL_RE.match(stream, i)
+            if m is not None:
+                yield ("str", m.group(1))
+                i = m.end()
+                continue
             depth = 1
             j = i + 1
             start = j

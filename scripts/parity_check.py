@@ -39,7 +39,8 @@ def main() -> None:
     mode, names = sys.argv[1], sys.argv[2:]
     from gonova_document_parser_spark.session import get_spark
 
-    spark = get_spark(app_name="parity", master="local[32]", shuffle_partitions=64)
+    cpus = len(os.sched_getaffinity(0))
+    spark = get_spark(app_name="parity", master=f"local[{cpus}]", shuffle_partitions=2 * cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as E
 

@@ -55,7 +55,8 @@ def test_query_matches_oracle(spark, duck, name):
 def test_no_cartesian_or_rowwise_python_in_any_query_plan(spark):
     """Sweeping scale-guard: NO driver query may compile to a
     CartesianProduct (all-pairs blowup) or BatchEvalPython (row-at-a-time
-    Python UDF — only Arrow-batched ArrowEvalPython/MapInPandas allowed)."""
+    Python UDF — only Arrow-batched ArrowEvalPython/MapInPandas/MapInArrow
+    allowed)."""
     import __spark_entry__ as E
 
     sf = "/root/testdata/sf0.001"

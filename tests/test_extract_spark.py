@@ -33,6 +33,9 @@ def test_byte_identity_vs_oracle(spark, corpus):
         assert row["extracted_text"] == oracle["extracted_text"], page["url"]
         assert row["page_type"] == oracle["page_type"]
         assert row["success"] == oracle["success"]
+        assert row["n_blocks"] == oracle["n_blocks"]
+        assert row["error"] == oracle["error"]
+        assert row["warc_ts"] == page["warc_ts"]
         assert [
             (s["start"], s["end"], s["kind"]) for s in row["spans"]
         ] == oracle["spans"]

@@ -9,7 +9,6 @@ from gonova_document_parser_spark.spec.htmlx import (
     extract_html_blocks,
     parse,
     select_candidate,
-    tokenize,
 )
 
 
@@ -91,12 +90,40 @@ def test_depth_cap_flattens_but_extracts():
     assert any("needle" in t for _, t in blocks)
 
 
+def _shape(node):
+    """Parse tree as nested lists: text as str, elements as (tag, children)."""
+    return [c.text if c.tag == "#text" else (c.tag, _shape(c)) for c in node.children]
+
+
 def test_tokenizer_script_raw_text():
-    toks = tokenize("<script>if (a<b) { x='</div>'; }</script><p>t</p>")
-    tags = [t for t in toks if t[0] in ("open", "close")]
-    assert ("open", "p") in tags
-    # nothing inside the script leaked as text
-    assert not any(t[0] == "text" and "a<b" in t[1] for t in toks)
+    src = "<script>if (a<b) { x='</div>'; }</script><p>t</p>"
+    # nothing inside the script leaked as text or markup
+    assert _shape(parse(src)) == [("script", []), ("p", ["t"])]
+    assert _text(extract_html_blocks(src.encode())) == ["t"]
+
+
+def test_scanner_edge_cases():
+    # comments/PIs/doctype dropped in place; a '<' that starts no tag stays
+    # text up to its quote-aware '>'; an unterminated quote ends the tag at
+    # the first '>', and with no '>' outside quotes the rest is text; '/'
+    # before '>' self-closes despite whitespace
+    cases = {
+        "<body><!-- c --><p>a</p><?pi x?><!x y>b</body>": [("body", [("p", ["a"]), "b"])],
+        "<p>1 < 2 and <1> and </> and <> end": [
+            ("p", ["1 ", "< 2 and <1>", " and ", "</>", " and ", "<>", " end"])
+        ],
+        "< p>spaced</ p>after": [("p", ["spaced"]), "after"],
+        '<div title="a>b">x</div><div title="open>y</div>z': [
+            ("div", ["x"]), ("div", ["y"]), "z"
+        ],
+        "<a title='x>y' z=\"q>rest": [("a", ["y' z=\"q>rest"])],
+        "<div / >in<br / >out<P>UP</p>": [("div", []), "in", ("br", []), "out", ("p", ["UP"])],
+        "<p>x<": [("p", ["x", "<"])],
+        '<p>a<b title="x>y"': [("p", ["a", '<b title="x>y"'])],
+        "<script/>kept<style>a<b>c</style>d": [("script", []), "kept", ("style", []), "d"],
+    }
+    for src, want in cases.items():
+        assert _shape(parse(src)) == want, src
 
 
 def test_script_sibling_content_survives():
@@ -121,9 +148,9 @@ def test_script_sibling_content_survives():
 def test_script_close_requires_delimiter():
     # '</scripts>' must NOT terminate a <script>; only '</script' followed
     # by whitespace, '/', or '>' does.
-    toks = tokenize("<script>a '</scripts>' b</script ><p>t</p>")
-    assert ("open", "p") in [t for t in toks if t[0] == "open"]
-    assert not any(t[0] == "text" and "b" in t[1] and "'" in t[1] for t in toks)
+    src = "<script>a '</scripts>' b</script ><p>t</p>"
+    assert _shape(parse(src)) == [("script", []), ("p", ["t"])]
+    assert _text(extract_html_blocks(src.encode())) == ["t"]
     doc = (
         b"<body><script>var s = '</styled>';</script>"
         b"<p>delimiter guard keeps this visible</p></body>"
