@@ -1537,9 +1537,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # whose newest row is CORRECTNESS_r04 (topic_mix .. contamination — all
     # displaced in r5), followed by 27 of the 50 recorded green in
     # CORRECTNESS_r05; the 23 entries displaced past position 50 below ALL
-    # hold green rows+schema+hash rows in CORRECTNESS_r05.json, so the
-    # r5 union r6 snapshots again cover all 73 queries with no row older
-    # than one round.
+    # hold green rows+schema+hash rows in CORRECTNESS_r05.json.  The
+    # recorded CORRECTNESS_r06.json holds the same 50 names as r05, so the
+    # 23 head entries' newest recorded rows are still CORRECTNESS_r04's:
+    # r5 union r6 covers 50 queries, and only r4 union r5 covers all 73.
     return {
         # --- head: newest green row is r4 (rotated in this round) --------
         "topic_mix": _q_topic_mix,
@@ -3048,7 +3049,8 @@ def oracle_sql() -> dict[str, str]:
                            ORDER BY length(r.pattern) DESC, r.allow DESC,
                                     r.pattern DESC) AS rn
                 FROM keyed k
-                JOIN grp r ON k.host = r.host AND regexp_matches(k.path, r.rx))
+                JOIN grp r ON k.host = r.host AND length(r.pattern) > 0
+                           AND regexp_matches(k.path, r.rx))
             SELECT k.doc_id, k.url,
                    COALESCE(m.allow, TRUE) AS allowed,
                    m.pattern AS matched_pattern

@@ -24,6 +24,8 @@ import datetime
 import random
 import zlib
 
+from .session import drop_zip_finders
+
 SEED = 42
 HOT_HOST = "hot.example.com"
 N_COLD_HOSTS = 49
@@ -310,6 +312,7 @@ def pages_from_documents(docs_df):
 
     def gen(batches):
         for pdf in batches:
+            drop_zip_finders()
             rows = [
                 doc_to_page(int(d), t if isinstance(t, str) else "", l or "und")
                 for d, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
@@ -325,6 +328,7 @@ def generate_pages(spark, n_rows: int, seed: int = SEED, num_partitions: int | N
 
     def gen(batches):
         for pdf in batches:
+            drop_zip_finders()
             rows = [make_page(int(i), seed) for i in pdf["id"]]
             yield pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
 

@@ -148,11 +148,15 @@ def _pin_store_params(spark: SparkSession, store_path: str, params: dict) -> Non
         finally:
             out.close()
         _, dst = _fs_and_path(spark, _params_path(store_path))
-        if not fs.rename(tmp, dst):
+        fs.rename(tmp, dst)
+        # a local-FS rename silently replaces an existing file, so two
+        # concurrent first runs can both get here: re-read what landed and
+        # let the comparison below fail the run whose params lost
+        existing = read_store_params(spark, store_path)
+        if existing is None:
             raise IOError(
                 f"could not commit {_params_path(store_path)} (rename failed)"
             )
-        return
     if existing != params:
         raise ValueError(
             f"store at {store_path} is pinned to {existing} but this run "

@@ -19,6 +19,8 @@ from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, FloatType
 
+from ..session import drop_zip_finders
+
 EMBED_DIM = 64
 
 
@@ -64,6 +66,7 @@ def make_embed_udf(encoder=None):
 
     @pandas_udf(ArrayType(FloatType()))
     def _embed(texts: pd.Series) -> pd.Series:
+        drop_zip_finders()
         return texts.map(lambda t: enc(t if isinstance(t, str) else ""))
 
     return _embed

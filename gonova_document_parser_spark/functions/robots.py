@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import drop_zip_finders
+
 # ---------------------------------------------------------------------------
 # parsing (per-file Python; ingestion tier, not query tier)
 # ---------------------------------------------------------------------------
@@ -102,6 +104,7 @@ def robots_rules(robots: DataFrame, host_col: str = "host",
         import pandas as pd
 
         for pdf in batches:
+            drop_zip_finders()
             rows = []
             for host, body in zip(pdf[host_col], pdf[body_col]):
                 for r in parse_robots_txt(body or "", host or ""):

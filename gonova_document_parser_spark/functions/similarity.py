@@ -15,6 +15,8 @@ import pandas as pd  # module-level: pandas_udf resolves stringified hints
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import drop_zip_finders
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Sum over zip_with products, accumulated in DOUBLE, left-to-right."""
@@ -151,6 +153,7 @@ def lsh_buckets_vectorized(
     def buckets(embs: "pd.Series") -> "pd.Series":
         import pandas as pd
 
+        drop_zip_finders()
         mat = np.stack(embs.to_numpy()).astype(np.float64)  # (B, dim)
         bits = (mat @ planes) >= 0  # (B, T*P)
         bits = bits.reshape(len(mat), n_tables, n_planes)
@@ -240,6 +243,7 @@ def quantized_lsh_buckets(
 
     @pandas_udf(ArrayType(LongType()))
     def buckets(embs: "pd.Series") -> "pd.Series":
+        drop_zip_finders()
         mat = np.stack(embs.to_numpy()).astype(np.float64)
         scaled = mat * scale
         # half-away-from-zero (what Spark round() and DuckDB ROUND do);

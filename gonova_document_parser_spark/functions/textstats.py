@@ -16,6 +16,8 @@ import pandas as pd  # real import: pandas_udf resolves the signature hints
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..session import drop_zip_finders
+
 # Tiny deterministic stopword sets — heuristic language ID, not a model.
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "a", "in", "is"],
@@ -192,6 +194,7 @@ def bpe_encode_udf(merges: list[tuple[str, str]]):
 
     @pandas_udf(ArrayType(StringType()))
     def _encode(texts: pd.Series) -> pd.Series:
+        drop_zip_finders()
         cache: dict = {}
         return texts.map(
             lambda t: encode(t, merges, _cache=cache, _ranks=ranks)
@@ -213,6 +216,7 @@ def bpe_token_count_udf(merges: list[tuple[str, str]]):
 
     @pandas_udf(IntegerType())
     def _count(texts: pd.Series) -> pd.Series:
+        drop_zip_finders()
         cache: dict = {}
         return texts.map(
             lambda t: len(encode(t, merges, _cache=cache, _ranks=ranks))

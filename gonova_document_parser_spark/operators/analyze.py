@@ -20,6 +20,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import drop_zip_finders
 from ..spec.classify import MIN_TEXT_LAYER_CHARS, classify_page_type
 from ..spec.pdfx import _page_content_streams, pdf_text_len
 
@@ -66,6 +67,7 @@ def analyze_pages(df: DataFrame) -> DataFrame:
         import pandas as pd
 
         for pdf in it:
+            drop_zip_finders()
             rows = []
             for url, payload in zip(pdf["url"], pdf["html"]):
                 data = bytes(payload) if payload is not None else b""

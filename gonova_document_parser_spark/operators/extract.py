@@ -36,6 +36,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..session import drop_zip_finders
 from ..spec import extract_document
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -75,6 +76,7 @@ def _make_batch_fn(passthrough: tuple[str, ...], scanned_extractor=None):
         results = list(schema)[2:]  # page_type .. error: extract_document keys
         names = [*schema.names, *passthrough]
         for batch in batches:
+            drop_zip_finders()
             rs = [
                 extract_document(payload or b"", scanned_extractor=scanned_extractor)
                 for payload in batch.column("html").to_pylist()

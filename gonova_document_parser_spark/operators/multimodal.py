@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import drop_zip_finders
+
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
     from pyspark.sql import DataFrame
@@ -195,6 +197,7 @@ def media_features(df: "DataFrame", payload_col: str = "html", fake: bool = True
         import pandas as pd
 
         for pdf in it:
+            drop_zip_finders()
             rows = []
             for url, payload in zip(pdf["url"], pdf[payload_col]):
                 data = bytes(payload) if payload is not None else b""
@@ -256,6 +259,7 @@ def resize_images(
         import pandas as pd
 
         for pdf in it:
+            drop_zip_finders()
             rows = []
             for url, payload in zip(pdf["url"], pdf[payload_col]):
                 data = bytes(payload) if payload is not None else b""
@@ -324,6 +328,7 @@ def sample_frames(
         import pandas as pd
 
         for pdf in it:
+            drop_zip_finders()
             rows = []
             for url, payload in zip(pdf["url"], pdf[payload_col]):
                 data = bytes(payload) if payload is not None else b""

@@ -31,6 +31,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, SparkSession
 
 from ..corpus import PAGES_DDL
+from ..session import drop_zip_finders
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -253,6 +254,7 @@ def read_warc(spark: SparkSession, path: str, pattern: str = "*.warc*") -> DataF
         import pandas as pd
 
         for pdf in batches:
+            drop_zip_finders()
             rows = []
             for content in pdf["content"]:
                 for rec in iter_warc_records(bytes(content)):
@@ -321,6 +323,7 @@ def read_wet(spark: SparkSession, path: str, pattern: str = "*.wet*") -> DataFra
         import pandas as pd
 
         for pdf in batches:
+            drop_zip_finders()
             rows = []
             for content in pdf["content"]:
                 for rec in iter_wet_records(bytes(content)):
@@ -429,6 +432,7 @@ def read_wat(spark: SparkSession, path: str, pattern: str = "*.wat*") -> DataFra
         import pandas as pd
 
         for pdf in batches:
+            drop_zip_finders()
             rows = []
             for content in pdf["content"]:
                 for rec in iter_wat_records(bytes(content)):

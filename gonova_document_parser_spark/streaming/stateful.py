@@ -28,6 +28,8 @@ from typing import TYPE_CHECKING, Any, Iterator
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import drop_zip_finders
+
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
@@ -45,6 +47,7 @@ def _make_dedup_group(state_ttl_ms: int | None):
         """Emit rows whose fingerprint was not seen before in this group."""
         import pandas as pd
 
+        drop_zip_finders()
         if state.hasTimedOut:  # idle TTL fired: bound state, emit nothing
             state.remove()
             yield pd.DataFrame([], columns=["url", "warc_ts", "fp"])

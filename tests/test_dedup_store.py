@@ -290,3 +290,40 @@ def test_params_sidecar_commit_is_atomic(spark, tmp_path):
     assert read_store_params(spark, store) == {
         "hash_fn": "xxhash64", "n": 3, "num_hashes": 32, "bands": 8,
     }
+
+
+def test_params_sidecar_lost_race_raises(spark, tmp_path, monkeypatch):
+    """Two concurrent first runs both see no _params.json and both rename
+    their tmp file over it; a local-FS rename silently replaces the file,
+    so the run whose params were overwritten must fail, not go on to band
+    its delta under parameters the store is no longer pinned to.
+    Simulated by landing the other run's params between this run's rename
+    and its read-back."""
+    import json
+    import os
+
+    import gonova_document_parser_spark.dedup_store as ds
+
+    store = str(tmp_path / "store")
+    os.makedirs(store)
+    ours = {"hash_fn": "xxhash64", "n": 3, "num_hashes": 32, "bands": 8}
+    theirs = {**ours, "hash_fn": "affine"}
+    real_read = ds.read_store_params
+    calls = []
+
+    def racing_read(spark_, path):
+        calls.append(path)
+        if len(calls) == 1:
+            return None  # both runs saw a fresh store
+        fs, dst = ds._fs_and_path(spark_, f"{store}/_params.json")
+        out = fs.create(dst, True)  # the other run's rename lands last
+        out.write(bytearray(json.dumps(theirs, sort_keys=True).encode()))
+        out.close()
+        return real_read(spark_, path)
+
+    monkeypatch.setattr(ds, "read_store_params", racing_read)
+    with pytest.raises(ValueError, match="pinned to"):
+        ds._pin_store_params(spark, store, ours)
+    monkeypatch.setattr(ds, "read_store_params", real_read)
+    ds._pin_store_params(spark, store, theirs)  # the winner carries on
+    assert real_read(spark, store) == theirs

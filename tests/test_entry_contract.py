@@ -52,6 +52,36 @@ def test_query_matches_oracle(spark, duck, name):
     assert ok, f"{name}: {detail}"
 
 
+def test_robots_oracle_skips_empty_pattern_rules(spark, duck, monkeypatch):
+    """An empty pattern is the group-presence sentinel of an empty
+    ``Disallow:`` and never matches: the engine skips it (``len > 0``) and
+    the robots_filter oracle SQL must too (``length(r.pattern) > 0``), or
+    its ``'^'`` regex matches every path on the host.  Fed to both sides,
+    alone on a host and beside real rules."""
+    from pyspark.sql import functions as F
+
+    last = "('closed.example.net', '*',         FALSE, '/'))"
+    sql = E.oracle_sql()["robots_filter"]
+    assert sql.count(last) == 1
+    sql = sql.replace(
+        last,
+        last[:-1] + ",\n('norules.example.io', '*', FALSE, ''),"
+        "\n('docs.example.com', '*', TRUE, ''))",
+    )
+    monkeypatch.setattr(E, "_ROBOTS_RULES", [
+        *E._ROBOTS_RULES,
+        ("norules.example.io", "*", False, ""),
+        ("docs.example.com", "*", True, ""),
+    ])
+    df = E.queries()["robots_filter"](spark, SF_DIR)
+    ok, detail = compare_query(df, duck, sql)
+    assert ok, detail
+    verdicts = {
+        (r["allowed"], r["matched_pattern"])
+        for r in df.where(F.col("url").contains("norules.example.io")).collect()
+    }
+    assert verdicts == {(True, None)}
+
 def test_no_cartesian_or_rowwise_python_in_any_query_plan(spark):
     """Sweeping scale-guard: NO driver query may compile to a
     CartesianProduct (all-pairs blowup) or BatchEvalPython (row-at-a-time
